@@ -500,8 +500,9 @@ def path_section_rollup(
     (/a, /a/b) — explode of a transform over the split path, bounded
     by max_depth so a pathological 10^4-segment URL cannot fan out
     (depth beyond the cap rolls into its max_depth ancestor, the safe
-    direction for a section census). One prefix-keyed aggregate; no
-    joins, no windows.
+    direction for a section census). A root-level page (/root.html)
+    has no directory and contributes no row. One prefix-keyed
+    aggregate; no joins, no windows.
 
     Output: (prefix, depth, n_subtree, n_direct), where n_direct
     counts pages whose immediate directory IS the prefix."""
@@ -518,8 +519,10 @@ def path_section_rollup(
             i.cast("long").alias("depth"),
         ),
     )
+    # F.sequence(1, 0) is [1, 0], not empty: a root-level page (no
+    # directory) must explode nothing
     rows = pages.select(
-        ndirs.alias("_nd"), F.explode(prefixes).alias("_p")
+        ndirs.alias("_nd"), F.explode(F.when(ndirs >= 1, prefixes)).alias("_p")
     ).select(
         F.col("_p.prefix").alias("prefix"),
         F.col("_p.depth").alias("depth"),

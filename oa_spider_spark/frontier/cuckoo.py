@@ -63,41 +63,47 @@ def _alt_bucket(fp: np.uint16, i: int, nb: int) -> int:
     return int((i ^ int((np.uint64(fp) * _FP_MIX) % np.uint64(nb))) % nb)
 
 
+def _put(table: np.ndarray, b: int, fp: int) -> bool:
+    """Store fp in bucket b's first empty slot; False when b is full."""
+    empty = np.flatnonzero(table[b] == 0)
+    if len(empty):
+        table[b, empty[0]] = fp
+    return len(empty) > 0
+
+
 def _insert_all(table: np.ndarray, h64: np.ndarray, nb: int) -> list:
     """Insert hashes into the bucket table (in sorted-hash order for
     determinism); returns the overflow stash (hashes whose eviction
-    walk exceeded MAX_KICKS — exact membership fallback)."""
+    walk exceeded MAX_KICKS — exact membership fallback). A failed walk
+    is undone, so no inserted key ever loses its fingerprint."""
     order = np.argsort(h64, kind="stable")
     fps, i1s, i2s = _derive(h64, nb)
     stash = []
     rng_state = 0
     for idx in order:
         fp, i1, i2 = int(fps[idx]), int(i1s[idx]), int(i2s[idx])
-        placed = False
-        for b in (i1, i2):
-            empty = np.flatnonzero(table[b] == 0)
-            if len(empty):
-                table[b, empty[0]] = fp
-                placed = True
-                break
-        if placed:
+        if _put(table, i1, fp) or _put(table, i2, fp):
             continue
         # eviction walk: deterministic victim slot from the walk count
-        b, cur = i1, fp
-        for kick in range(MAX_KICKS):
+        b, cur, kicks = i1, fp, []
+        for _ in range(MAX_KICKS):
             rng_state = (rng_state * 6364136223846793005 + 1442695040888963407) & (
                 (1 << 64) - 1
             )
             slot = (rng_state >> 33) % BUCKET_SLOTS
+            kicks.append((b, slot, int(table[b, slot])))
             cur, table[b, slot] = int(table[b, slot]), cur
             b = _alt_bucket(np.uint16(cur), b, nb)
-            empty = np.flatnonzero(table[b] == 0)
-            if len(empty):
-                table[b, empty[0]] = cur
-                placed = True
+            if _put(table, b, cur):
                 break
-        if not placed:
-            stash.append(int(h64[idx]))
+        else:
+            # undo the walk: the last displaced fingerprint belongs to an
+            # already-inserted key and has no slot; restoring every kicked
+            # slot puts it back, and the new key goes to the stash
+            for b, slot, prev in reversed(kicks):
+                table[b, slot] = prev
+            # signed, as the probe compares it against the int64 column
+            stash.append(int(h64.view(np.int64)[idx]))
     return stash
 
 

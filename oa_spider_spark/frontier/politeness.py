@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_HOST_BUDGET
+from ..ranking import cell_offsets, cell_rank
 
 
 def kind_rank(col: Column | str = "kind") -> Column:
@@ -86,149 +87,60 @@ def apply_budget(
     )
 
 
-def global_order_and_limit(
-    df: DataFrame,
-    limit: int | None = None,
-    partitions: int | None = None,
-    subbuckets: int = 256,
-) -> DataFrame:
-    """Global deterministic order + optional round limit, with the fetch
-    sequence number materialized as `fetch_order` (basis of the
-    crawl-order equivalence tests).
-
-    A bare `Window.orderBy(...)` row_number would funnel every row through
-    ONE task — a non-starter at 10^10 frontier rows. And bucketing by the
-    leading sort key alone is not enough: with only ~100 priority values,
-    each in-bucket window is still ~1% of the frontier in ONE task.
-    So the rank is decomposed on the first TWO sort keys:
-
-      * `_b`  — the EXACT negated priority (ascending `_b` ≡ priority
-        DESC for any int domain — a clamped bucket would let an
-        out-of-range priority share a bucket with several values, and
-        the `_s` split below would then interleave them out of order);
-      * `_s`  — `created_ms` quantized into `subbuckets` ranges, negated
-        (the second key sorts DESC), so ascending (_b, _s) is a prefix of
-        the total order: rows in earlier cells outrank all later cells,
-        and the in-cell window re-sorts by the full key.
-
-    The offsets metadata frame is O(distinct priorities × subbuckets)
-    rows (~100 × 256 in practice — priorities are small ints by
-    convention, but correctness no longer depends on that).
-
-    Global rank = (broadcast) cell offset + in-cell row_number. Offsets
-    come from a groupBy(_b,_s) count + a running sum over that ≤100×
-    subbuckets-row METADATA frame (partition-less window over metadata is
-    fine; over data it never is). Per-cell work is ~1/(100·subbuckets) of
-    the frontier — bounded single-task sorts at any scale. The only
-    driver round-trip is a 2-value min/max bounds agg. The selection is
-    persisted so the bounds/count jobs and the rank job don't re-run the
-    upstream DAG."""
-    from pyspark import StorageLevel
-
-    inp = df.persist(StorageLevel.MEMORY_AND_DISK)
-    bucket = (-F.col("priority")).cast("long")
-    bounds = inp.agg(F.min("created_ms").alias("lo"), F.max("created_ms").alias("hi")).collect()[0]
-    lo = bounds["lo"] if bounds["lo"] is not None else 0
-    span = max(1, (bounds["hi"] - lo + 1) if bounds["hi"] is not None else 1)
-    q = max(1, span // subbuckets)
-    # NULL created_ms must not yield _s = NULL: the offsets equi-join would
-    # silently drop the row (null keys never match). Coalesce to `lo` — the
-    # row lands in the LAST ascending _s cell, and the in-cell full-key
-    # window sorts it after the real lo values (desc ⇒ nulls last), so the
-    # total order is preserved. Unreachable from normalize_frontier today,
-    # but a silent-data-loss trap for new frontier sources otherwise.
-    sub = -F.expr(f"(coalesce(created_ms, {lo}L) - {lo}L) div {q}L").cast("long")
-
-    keyed = inp.withColumn("_b", bucket).withColumn("_s", sub)
-    w_off = Window.orderBy("_b", "_s").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        keyed.groupBy("_b", "_s")
-        .agg(F.count("*").alias("_n"))
-        .withColumn("_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0)))
-        .select("_b", "_s", "_off")
-    )
-
-    w = Window.partitionBy("_b", "_s").orderBy(*order_cols())
-    out = (
-        keyed.withColumn("_rn", F.row_number().over(w))
-        .join(F.broadcast(offsets), ["_b", "_s"])
-        .withColumn("fetch_order", (F.col("_off") + F.col("_rn")).cast("int"))
-        .drop("_b", "_s", "_rn", "_off")
-    )
-    if limit is not None:
-        out = out.filter(F.col("fetch_order") <= limit)
-    # let the caller release the cached selection once the round is staged
-    out._ordered_cache = inp  # type: ignore[attr-defined]
-    return out
-
-
 def budget_and_order(
     df: DataFrame, default_budget: int = DEFAULT_HOST_BUDGET, limit: int | None = None
 ) -> DataFrame:
     """Fused politeness budget + global deterministic rank, fully
-    distributed (replaces apply_budget → global_order_and_limit on the
-    round's hot path).
+    distributed: the same selection and `fetch_order` as `apply_budget`
+    followed by a flat sort on `order_cols`, with `fetch_order` = the
+    1-based position in that sort.
 
     `apply_budget`'s per-host window sorts a host's ENTIRE backlog in one
     task — at 40% hot-host share that single sort is O(frontier) serial
     work and caps scaling (measured: the level-independent wall time grew
-    from 19 s to 28 s when the round doubled). Decomposing by the leading
-    sort key kills it:
+    from 19 s to 28 s when the round doubled). Both ranks here are
+    `ranking.cell_rank` over the clamped priority cell `_b` (a monotone
+    coarsening of priority DESC; every row of cell b outranks every row
+    of cell b+1 within its host and globally):
 
-      1. rows bucket by clamped priority `_b` (every row of bucket b
-         outranks every row of bucket b+1 within its host and globally);
-      2. per-(host, _b) counts + a ≤100-row-per-host running sum give
-         `take` = how many rows of that cell make the host's budget —
-         cells past the cutoff drop without ever being sorted;
-      3. `row_number` within (host, _b) — cells are ≈1/100 of a host, so
-         the hot host's sort becomes 100 parallel small sorts;
-      4. global `fetch_order` = per-_b offsets (≤100-row running sum) +
-         `row_number` within _b over the budget survivors.
+      1. per-(host, _b) counts, offset per host (`cell_offsets`), keep the
+         cells whose offset is under the host's budget — cells past the
+         cutoff drop without ever being sorted;
+      2. host rank = offset + `row_number` within (host, _b), kept while
+         ≤ budget — the hot host's sort becomes ≤100 parallel small sorts;
+      3. global `fetch_order` = per-_b offsets over the budget survivors
+         (≤100-row metadata) + `row_number` within _b.
 
-    Everything is JVM window/agg work on ≤100-row metadata frames except
-    the two cell-level windows; there is NO driver collect (scale-safe at
-    10^6 hosts: the (host,_b) join is a plain equi-join Catalyst sizes
-    itself). Ordering is bit-identical to the unfused pipeline — the
-    equivalence suite pins it against the sequential simulator."""
+    There is NO driver collect (scale-safe at 10^6 hosts: the (host, _b)
+    join is a plain equi-join Catalyst sizes itself). The equivalence
+    suite pins the order against the sequential simulator."""
     from pyspark import StorageLevel
 
     inp = df.persist(StorageLevel.MEMORY_AND_DISK)
     bucket = F.least(F.greatest(F.lit(99) - F.col("priority"), F.lit(0)), F.lit(99))
+    budget = F.coalesce(F.col("_bud"), F.lit(default_budget)).cast("long")
 
     cnts = inp.groupBy(F.col("host"), bucket.alias("_b")).agg(
         F.count("*").alias("_n"), F.max("budget_per_round").alias("_bud")
     )
-    w_host = (
-        Window.partitionBy("host").orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    budget = F.coalesce(F.col("_bud"), F.lit(default_budget)).cast("long")
-    cum_before = F.coalesce(F.sum("_n").over(w_host), F.lit(0))
     takes = (
-        cnts.withColumn("_take", F.least(F.col("_n"), F.greatest(budget - cum_before, F.lit(0))))
-        .filter(F.col("_take") > 0)
-        .select("host", "_b", "_take")
+        cell_offsets(cnts, ["_b"], "_n", by=["host"])
+        .filter(F.col("_off") < budget)
+        .withColumn("_take", F.least(F.col("_n"), budget - F.col("_off")))
     )
-
-    # global rank offsets over the SELECTED rows: ≤100-row running sum
-    w_glob = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        takes.groupBy("_b")
-        .agg(F.sum("_take").alias("_sel"))
-        .withColumn("_off", F.coalesce(F.sum("_sel").over(w_glob), F.lit(0)))
-        .select("_b", "_off")
+    keyed = inp.withColumn("_b", bucket)
+    host_offsets = takes.select("host", "_b", "_off", "_bud")
+    kept = (
+        cell_rank(keyed, host_offsets, ["_b"], order_cols(), "_hr", by=["host"])
+        .filter(F.col("_hr") <= budget)
+        .drop("_hr", "_bud")
     )
-
-    w_cell = Window.partitionBy("host", "_b").orderBy(*order_cols())
-    w_bucket = Window.partitionBy("_b").orderBy(*order_cols())
+    sel = takes.groupBy("_b").agg(F.sum("_take").alias("_sel"))
+    offsets = cell_offsets(sel, ["_b"], "_sel")
     out = (
-        inp.withColumn("_b", bucket)
-        .join(takes, ["host", "_b"])
-        .withColumn("_hr", F.row_number().over(w_cell))
-        .filter(F.col("_hr") <= F.col("_take"))
-        .withColumn("_rn", F.row_number().over(w_bucket))
-        .join(F.broadcast(offsets), "_b")
-        .withColumn("fetch_order", (F.col("_off") + F.col("_rn")).cast("int"))
-        .drop("_b", "_hr", "_take", "_rn", "_off")
+        cell_rank(kept, offsets.drop("_sel"), ["_b"], order_cols(), "fetch_order")
+        .withColumn("fetch_order", F.col("fetch_order").cast("int"))
+        .drop("_b")
     )
     if limit is not None:
         out = out.filter(F.col("fetch_order") <= limit)
@@ -372,14 +284,11 @@ def rendezvous_shards(
     to the host's SECOND-best shard (two-choices; one spill round — a
     spilled-into shard may exceed cap by design, documented bound).
 
-    Scale shape: scores/argmax are row-local array expressions. The
-    per-shard cumulative admission is NEVER a bare per-shard window
-    (K keys ⇒ 1/K of all hosts in one task): it reuses the frontier's
-    two-level decomposition (global_order_and_limit above) — quantized
-    score sub-buckets, per-cell weight sums running-summed over a
-    K x 256 METADATA window, in-cell running sum keyed by (shard,
-    cell). portable=True swaps xxhash64 for md5h60 so a DuckDB oracle
-    reproduces every score (CLAUDE.md trick); n_shards must be >= 2.
+    Scale shape: scores/argmax are row-local array expressions; the
+    per-shard cumulative admission is `ranking.cell_rank` per shard over
+    quantized score cells. portable=True swaps xxhash64 for md5h60 so a
+    DuckDB oracle reproduces every score (CLAUDE.md trick); n_shards
+    must be >= 2.
     """
     from ..operators.dedup import md5h60
 
@@ -414,28 +323,16 @@ def rendezvous_shards(
     # weakly monotone (buckets are intervals) for signed xxhash64 too
     q = (1 << 52) if portable else (1 << 56)
     keyed = base.withColumn("_s", -F.expr(f"_best div {q}L"))
-    w_off = (
-        Window.partitionBy("primary_shard")
-        .orderBy("_s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        keyed.groupBy("primary_shard", "_s")
-        .agg(F.sum("_w").alias("_cw"))
-        .withColumn("_off", F.coalesce(F.sum("_cw").over(w_off), F.lit(0)))
-        .select("primary_shard", "_s", "_off")
-    )
-    w_in = (
-        Window.partitionBy("primary_shard", "_s")
-        .orderBy(F.col("_best").desc(), F.col("host").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    run = F.col("_off") + F.sum("_w").over(w_in)
+    shard = ["primary_shard"]
+    offsets = cell_offsets(
+        keyed.groupBy(*shard, "_s").agg(F.sum("_w").alias("_cw")), ["_s"], "_cw", by=shard
+    ).drop("_cw")
+    order = [F.col("_best").desc(), F.col("host").asc()]
     return (
-        keyed.join(F.broadcast(offsets), ["primary_shard", "_s"])
+        cell_rank(keyed, offsets, ["_s"], order, "_run", by=shard, weight="_w")
         .withColumn(
             "assigned_shard",
-            F.when(run <= cap, F.col("primary_shard")).otherwise(
+            F.when(F.col("_run") <= cap, F.col("primary_shard")).otherwise(
                 F.col("secondary_shard")
             ),
         )
@@ -464,41 +361,23 @@ def fetch_timeline(
     between sequential fetches (time.sleep politeness); at fleet scale
     the sleep becomes a precomputed schedule column workers obey.
 
-    Scale shape: the per-host rank is NEVER a flat per-host window (a
-    hot host with 10^7 pending URLs would sort in one task): priorities
-    are monotonely coarsened into `div bucket_span` cells (clamp-style
-    coarsening is safe because in-cell windows order by the FULL key —
-    the budget_and_order precedent, CLAUDE.md), per-cell counts are
-    running-summed over a metadata-sized (host x cell) window, and the
-    in-cell row_number is keyed by (host, cell). Hosts absent from the
-    delays table get default_delay_ms (left join + coalesce); both
-    joins broadcast metadata-sized frames, so the only data shuffle is
-    the (host, cell) window exchange."""
+    Scale shape: the per-host rank is `ranking.cell_rank` per host over
+    `div bucket_span` priority cells, never a flat per-host window (a
+    hot host with 10^7 pending URLs would sort in one task). Hosts
+    absent from the delays table get default_delay_ms (broadcast left
+    join + coalesce)."""
     s = selected.select(
         F.col(host_col).alias("host"),
         F.col(url_col).alias("url"),
         F.col(order_col).cast("long").alias("_o"),
     )
     keyed = s.withColumn("_b", F.expr(f"_o div {int(bucket_span)}L"))
-    w_off = (
-        Window.partitionBy("host")
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        keyed.groupBy("host", "_b")
-        .agg(F.count("*").alias("_c"))
-        .withColumn("_off", F.coalesce(F.sum("_c").over(w_off), F.lit(0)))
-        .select("host", "_b", "_off")
-    )
-    w_in = Window.partitionBy("host", "_b").orderBy(
-        F.col("_o").asc(), F.col("url").asc()
-    )
-    slotted = (
-        keyed.join(F.broadcast(offsets), ["host", "_b"])
-        .withColumn(
-            "slot", (F.col("_off") + F.row_number().over(w_in) - 1).cast("long")
-        )
+    offsets = cell_offsets(
+        keyed.groupBy("host", "_b").agg(F.count("*").alias("_c")), ["_b"], "_c", by=["host"]
+    ).drop("_c")
+    order = [F.col("_o").asc(), F.col("url").asc()]
+    slotted = cell_rank(keyed, offsets, ["_b"], order, "_rk", by=["host"]).withColumn(
+        "slot", (F.col("_rk") - 1).cast("long")
     )
     d = delays.select(
         F.col(host_col).alias("host"),
@@ -636,14 +515,9 @@ def byte_budget_select(
     runs when the constraint is egress, not URL count (O4's budget caps
     rows; this caps bytes, and X72/X97's size estimates feed it).
 
-    Scale shape: the global running sum is NEVER one flat window —
-    the order key decomposes into (exact negated priority × url
-    PREFIX) cells: a string prefix is a monotone coarsening of the
-    url order, so in-cell running sums over the FULL url key compose
-    with cell offsets from a metadata-sized window exactly as in
-    global_order_and_limit / rendezvous_shards (the budget_and_order
-    clamp precedent, CLAUDE.md). Output: every candidate with its
-    cumulative position and the admission verdict."""
+    Scale shape: the global running sum is `ranking.cell_rank` over
+    (exact negated priority × url PREFIX) cells. Output: every candidate
+    with its cumulative position and the admission verdict."""
     keyed = candidates.select(
         F.col(url_col).alias("url"),
         F.col(prio_col).cast("long").alias("priority"),
@@ -651,24 +525,12 @@ def byte_budget_select(
         (-F.col(prio_col).cast("long")).alias("_p"),
         F.substring(F.col(url_col), 1, prefix_len).alias("_pre"),
     )
-    w_off = (
-        Window.orderBy("_p", "_pre")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        keyed.groupBy("_p", "_pre")
-        .agg(F.sum("est_bytes").alias("_cw"))
-        .withColumn("_off", F.coalesce(F.sum("_cw").over(w_off), F.lit(0)))
-        .select("_p", "_pre", "_off")
-    )
-    w_in = (
-        Window.partitionBy("_p", "_pre")
-        .orderBy("url")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    cells = ["_p", "_pre"]
+    offsets = cell_offsets(
+        keyed.groupBy(*cells).agg(F.sum("est_bytes").alias("_cw")), cells, "_cw"
+    ).drop("_cw")
     return (
-        keyed.join(F.broadcast(offsets), ["_p", "_pre"])
-        .withColumn("cum_bytes", F.col("_off") + F.sum("est_bytes").over(w_in))
+        cell_rank(keyed, offsets, cells, ["url"], "cum_bytes", weight="est_bytes")
         .withColumn("selected", F.col("cum_bytes") <= budget_bytes)
         .select("url", "priority", "est_bytes", "cum_bytes", "selected")
     )
@@ -853,9 +715,8 @@ def priority_aging(
     classic scheduler problem; the fix is the classic aging answer —
     effective priority grows with wait time, so everything eventually
     drains). effective = base + waited div boost_every, all integers,
-    row-local, and the result feeds the existing two-level
-    global_order_and_limit unchanged (aging only changes the VALUE
-    being bucketed, not the ordering machinery).
+    row-local, and the result feeds budget_and_order unchanged (aging
+    only changes the VALUE being bucketed, not the ordering machinery).
 
     Output: one row per base priority class — n_urls, max_wait,
     n_starved (waited >= starve_rounds), n_boosted (effective > base),

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..ranking import cell_offsets, cell_rank
 from .dedup import md5h60
 
 
@@ -413,16 +414,10 @@ def systematic_weighted_sample(
     rejected for the oracle surface: ln/pow rounding is not bit-stable
     across engines, and near-tie keys would then flip sample membership.
 
-    Scale shape: the cumulative sum is the repo's two-level bucketed
-    pattern (global_order_and_limit's) — per-range-bucket totals, a
-    running-sum window over the ≤n_buckets METADATA rows (partition-less
-    over metadata is fine; over data it never is), broadcast offsets
-    back, in-bucket windows partitioned by bucket. One groupBy shuffle +
-    one bucket-partitioned window; no global sort, no single-task
-    window. The only driver round-trip is a 2-value min/max bounds agg.
+    Scale shape: the cumulative sum is `ranking.cell_rank` over
+    ≤n_buckets `order_col` range cells. The only driver round-trip is a
+    2-value min/max bounds agg.
     """
-    from pyspark.sql import Window
-
     w = F.coalesce(F.col(weight_col), F.lit(0)).cast("long")
     bounds = df.agg(
         F.min(order_col).alias("lo"), F.max(order_col).alias("hi")
@@ -434,24 +429,10 @@ def systematic_weighted_sample(
         order_col, F.col(weight_col), w.alias("_w")
     ).withColumn("_b", ((F.col(order_col) - F.lit(lo)) / F.lit(width)).cast("long"))
     btot = data.groupBy("_b").agg(F.sum("_w").alias("_bw"))
-    w_off = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("_b").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
+    offsets = cell_offsets(btot, ["_b"], "_bw").crossJoin(
+        btot.agg(F.sum("_bw").alias("_tot"))
     )
-    offsets = btot.select(
-        "_b",
-        F.coalesce(F.sum("_bw").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_bw").over(w_all).alias("_tot"),
-    )
-    w_in = (
-        Window.partitionBy("_b")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = (F.col("_off") + F.sum("_w").over(w_in)).alias("_cum")
-    picks = data.join(F.broadcast(offsets), "_b").select(
-        order_col, weight_col, "_w", "_tot", cum
-    )
+    picks = cell_rank(data, offsets.drop("_bw"), ["_b"], [order_col], "_cum", weight="_w")
     n_picks = F.expr(f"({k} * _cum) div _tot - ({k} * (_cum - _w)) div _tot")
     return (
         picks.withColumn("n_picks", n_picks.cast("long"))
@@ -912,11 +893,10 @@ def dense_vocab_ids(
     ids and only unseen terms append after max(vid), ranked among
     themselves — growing the corpus can only extend the table.
 
-    Scale shape: the global rank is the two-level cell decomposition
-    (exact negated df × term PREFIX — a prefix is a monotone coarsening
-    of the term order, so the df=1 long tail spreads across prefix
-    cells instead of one giant window task); the append base rides a
-    broadcast one-row max, never a driver collect."""
+    Scale shape: the global rank is `ranking.cell_rank` over (exact
+    negated df × term PREFIX) cells, so the df=1 long tail spreads
+    across prefix cells; the append base rides a broadcast one-row max,
+    never a driver collect."""
 
     def _ranked(df0: DataFrame, base_col) -> DataFrame:
         extra = [F.col("_mx")] if "_mx" in df0.columns else []
@@ -927,23 +907,12 @@ def dense_vocab_ids(
             F.substring(F.col(term_col), 1, prefix_len).alias("_pre"),
             *extra,
         )
-        w_off = Window.orderBy("_d", "_pre").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = (
-            keyed.groupBy("_d", "_pre")
-            .agg(F.count("*").alias("_c"))
-            .withColumn("_off", F.coalesce(F.sum("_c").over(w_off), F.lit(0)))
-            .select("_d", "_pre", "_off")
-        )
-        w_in = Window.partitionBy("_d", "_pre").orderBy("term")
-        return (
-            keyed.join(F.broadcast(offsets), ["_d", "_pre"])
-            .withColumn(
-                "vid",
-                base_col + F.col("_off") + F.row_number().over(w_in) - 1,
-            )
-            .select("term", "df", "vid")
+        cells = ["_d", "_pre"]
+        offsets = cell_offsets(
+            keyed.groupBy(*cells).agg(F.count("*").alias("_c")), cells, "_c"
+        ).drop("_c")
+        return cell_rank(keyed, offsets, cells, ["term"], "_rk").select(
+            "term", "df", (base_col + F.col("_rk") - 1).alias("vid")
         )
 
     if existing is None:
@@ -1344,15 +1313,12 @@ def grouped_topk(
 
     Fully relational, zero driver collects: per-GROUP score bounds
     (one aggregate, joined back — not collected), scores quantized
-    into ≤subbuckets cells per group, per-cell counts running-summed
-    over a (group × cells) metadata window partitioned by group. Cells
-    whose offset already reaches k are DISCARDED BEFORE any window —
-    the below-cutoff mass of a hot group is never sorted — and the
-    surviving boundary cells get in-cell row_numbers over ~1/subbuckets
-    of their group. Degenerate case: a group whose scores are all
-    equal collapses to one cell and that cell's tie-break sort is one
-    task of the group's size — inherent to exact ties, the same bound
-    the knn/extract_tables windows document.
+    into ≤subbuckets cells per group, ranked by `ranking.cell_rank` per
+    group. Cells whose offset already reaches k are DISCARDED BEFORE
+    the in-cell window — the below-cutoff mass of a hot group is never
+    sorted. Degenerate case: a group whose scores are all equal
+    collapses to one cell and that cell's tie-break sort is one task of
+    the group's size — inherent to exact ties.
 
     Output: group_cols + (id_col, score_col, rank), rank 1..k per
     group by (score DESC, id ASC)."""
@@ -1366,21 +1332,12 @@ def grouped_topk(
     keyed = j.withColumn(
         "_q", F.expr(f"greatest((_hi - _lo + 1) div {int(subbuckets)}, 1)")
     ).withColumn("_s", F.expr(f"-(({score_col} - _lo) div _q)"))
-    w_off = Window.partitionBy(*g).orderBy("_s").rowsBetween(
-        Window.unboundedPreceding, -1
+    offsets = cell_offsets(
+        keyed.groupBy(*g, "_s").agg(F.count("*").alias("_n")), ["_s"], "_n", by=g
     )
-    offsets = (
-        keyed.groupBy(*g, "_s")
-        .agg(F.count("*").alias("_n"))
-        .withColumn("_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0)))
-        .select(*g, "_s", "_off")
-    )
-    survivors = keyed.join(offsets, [*g, "_s"]).filter(F.col("_off") < k)
-    w_in = Window.partitionBy(*g, "_s").orderBy(
-        F.col(score_col).desc(), F.col(id_col).asc()
-    )
+    order = [F.col(score_col).desc(), F.col(id_col).asc()]
     return (
-        survivors.withColumn("rank", F.col("_off") + F.row_number().over(w_in))
+        cell_rank(keyed, offsets.filter(F.col("_off") < k).drop("_n"), ["_s"], order, "rank", by=g)
         .filter(F.col("rank") <= k)
         .select(*g, id_col, score_col, F.col("rank").cast("long").alias("rank"))
     )

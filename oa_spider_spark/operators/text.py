@@ -5,8 +5,10 @@ in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..ranking import cell_offsets, cell_rank
 
 # tiny stopword list for quality scoring (deterministic, language-neutral
 # enough for synthetic data)
@@ -923,8 +925,8 @@ def hashed_linear_score(
     (xxhash64 scale default; md5h60 when `portable` so the oracle
     reproduces bucket ids). Duplicate tokens count with multiplicity
     (term frequency), the standard linear-model semantics. Per doc:
-    logit_micro = Σ tf_b · w_b + bias (bucket -1 in the weight table),
-    accept = logit >= threshold.
+    logit_micro = Σ tf_b · w_b + bias (bucket -1 in the weight table,
+    0 when the table has no bias row), accept = logit >= threshold.
 
     Plan: one token explode -> (doc, bucket, tf) aggregate (map-side
     combined), one BROADCAST join against the ≤n_buckets-row model,
@@ -955,8 +957,10 @@ def hashed_linear_score(
             ).cast("long").alias("_dot")
         )
     )
-    bias = weights.filter(F.col("bucket") == -1).select(
-        F.col("weight_micro").alias("_bias")
+    bias = weights.agg(
+        F.coalesce(
+            F.sum(F.when(F.col("bucket") == -1, F.col("weight_micro"))), F.lit(0)
+        ).cast("long").alias("_bias")
     )
     out = scored.crossJoin(F.broadcast(bias))
     return out.select(
@@ -977,14 +981,15 @@ def fluency_buckets(
     hard-dropping the rest. Works on any per-doc integer score —
     X67's bigram fluency is the in-repo model.
 
-    The global rank is the repo's two-level cell decomposition
-    (dense_vocab_ids' template): cells keyed by the EXACT negated
-    score × an id-prefix (monotone coarsening of the tie-break, so a
-    mass of equal scores spreads across prefix cells instead of one
-    giant window task); offsets from a metadata-sized window over cell
-    counts; in-cell row_number by id. Buckets by integer thirds:
-    rank·3 ≤ n → head, ≤ 2n → middle, else tail — exact on both
-    engines, no percentile estimation anywhere.
+    The global rank is `ranking.cell_rank` over cells keyed by the
+    EXACT negated score × `id div 256`, so a mass of equal scores
+    spreads across id cells. With distinct scores there are as many
+    cells as documents, so their offsets are themselves ranked in two
+    levels: the score quantized into ≤256 ranges (global min/max,
+    joined, not collected) is the coarse cell, and the only window
+    without a partition runs over those ≤256 rows. Buckets by integer
+    thirds: rank·3 ≤ n → head, ≤ 2n → middle, else tail — exact on
+    both engines, no percentile estimation anywhere.
 
     Output: (id_col, score_col, rank, bucket)."""
     keyed = scored.select(
@@ -993,21 +998,23 @@ def fluency_buckets(
         (-F.col(score_col).cast("long")).alias("_d"),
         F.expr(f"{id_col} div 256").alias("_pre"),
     )
-    w_off = Window.orderBy("_d", "_pre").rowsBetween(
-        Window.unboundedPreceding, -1
+    stats = keyed.agg(
+        F.min("_s").alias("_lo"), F.max("_s").alias("_hi"), F.count("*").alias("_n")
     )
-    offsets = (
+    # coarse cell: score DESC quantized into ceil(span/256)-wide ranges
+    meta = (
         keyed.groupBy("_d", "_pre")
         .agg(F.count("*").alias("_c"))
-        .withColumn("_off", F.coalesce(F.sum("_c").over(w_off), F.lit(0)))
-        .select("_d", "_pre", "_off")
+        .crossJoin(F.broadcast(stats.select("_lo", "_hi")))
+        .withColumn("_q", F.expr("-((-_d - _lo) div ((_hi - _lo + 256) div 256))"))
     )
-    w_in = Window.partitionBy("_d", "_pre").orderBy("_id")
-    n = scored.agg(F.count("*").cast("long").alias("_n"))
-    ranked = (
-        keyed.join(F.broadcast(offsets), ["_d", "_pre"])
-        .withColumn("rank", F.col("_off") + F.row_number().over(w_in))
-        .crossJoin(F.broadcast(n))
+    coarse = cell_offsets(meta.groupBy("_q").agg(F.sum("_c").alias("_qc")), ["_q"], "_qc")
+    fine = cell_rank(meta, coarse.drop("_qc"), ["_q"], ["_d", "_pre"], "_end", weight="_c")
+    # the fine offsets are data-sized: `by` = the exact score makes their
+    # join a plain equi-join instead of a broadcast
+    offsets = fine.select("_d", "_pre", (F.col("_end") - F.col("_c")).alias("_off"))
+    ranked = cell_rank(keyed, offsets, ["_pre"], ["_id"], "rank", by=["_d"]).crossJoin(
+        F.broadcast(stats.select("_n"))
     )
     return ranked.select(
         F.col("_id").alias(id_col),

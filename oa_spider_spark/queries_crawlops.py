@@ -2899,14 +2899,15 @@ def q_path_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     path_section_rollup). Pages live at /s{e mod 4}/c{e mod 12}/p{e}
     .html — four top sections, three subdirs each (c ≡ s mod 4), so
     /sX rows carry subtree counts with zero directs and /sX/cY rows
-    are all-direct."""
+    are all-direct — except every tenth event, a root-level page
+    /p{e}.html that has no directory and contributes no row."""
     from .frontier.canon import path_section_rollup
 
     e = _t(spark, sf_dir, "events")
     eid = F.col("event_id")
+    dirs = F.concat(F.lit("/s"), (eid % 4).cast("string"), F.lit("/c"), (eid % 12).cast("string"))
     path = F.concat(
-        F.lit("/s"), (eid % 4).cast("string"),
-        F.lit("/c"), (eid % 12).cast("string"),
+        F.when(eid % 10 != 0, dirs).otherwise(F.lit("")),
         F.lit("/p"), eid.cast("string"), F.lit(".html"),
     )
     return path_section_rollup(e.select(path.alias("path")))
@@ -2918,6 +2919,7 @@ WITH p AS (
          '/s' || (event_id % 4)::VARCHAR || '/c' || (event_id % 12)::VARCHAR
            AS s2
   FROM events
+  WHERE event_id % 10 <> 0
 ), rows_ AS (
   SELECT s1 AS prefix, 1::BIGINT AS depth, FALSE AS direct FROM p
   UNION ALL

@@ -1058,11 +1058,12 @@ def test_hrw_movement_matches_python_argmax(spark):
 
 def test_path_rollup_depth_cap_and_directs(spark):
     """Prefix counts are exact; a pathological deep path rolls into its
-    max_depth ancestor instead of fanning out."""
+    max_depth ancestor instead of fanning out; a root-level page has no
+    directory and adds no row (F.sequence(1, 0) is [1, 0], not empty)."""
     from oa_spider_spark.frontier.canon import path_section_rollup
 
     deep = "/" + "/".join(f"d{i}" for i in range(50)) + "/x.html"
-    rows = [("/a/b/p1.html",), ("/a/b/p2.html",), ("/a/q.html",), (deep,)]
+    rows = [("/a/b/p1.html",), ("/a/b/p2.html",), ("/a/q.html",), (deep,), ("/root.html",)]
     df = spark.createDataFrame(rows, "path string")
     out = {
         (r["prefix"], r["depth"]): r
@@ -1076,3 +1077,4 @@ def test_path_rollup_depth_cap_and_directs(spark):
     deep_rows = [k for k in out if k[0].startswith("/d0")]
     assert len(deep_rows) == 3
     assert out[("/d0/d1/d2", 3)]["n_direct"] == 1
+    assert set(out) == {("/a", 1), ("/a/b", 2), *deep_rows}

@@ -1387,6 +1387,13 @@ def test_hashed_linear_score_exact_dot(spark):
     assert out[1]["logit_micro"] == logit("good good bad")
     assert out[2]["logit_micro"] == logit("unknown words only")
     assert out[1]["accept"] == (out[1]["logit_micro"] >= 0)
+    # a weight table with no bias row scores with bias 0, never empty
+    w0 = spark.createDataFrame(wrows[:-1], "bucket int, weight_micro long")
+    out0 = {
+        r["doc_id"]: r["logit_micro"]
+        for r in hashed_linear_score(docs, w0, n_buckets=64, portable=True).collect()
+    }
+    assert out0 == {1: logit("good good bad") - 100, 2: logit("unknown words only") - 100}
 
 
 def test_threshold_sweep_exact_counts(spark):
@@ -1414,6 +1421,14 @@ def test_threshold_sweep_exact_counts(spark):
     r8 = out[800]
     assert (r8["n_predicted"], r8["tp"]) == (1, 1)
     assert r8["precision_milli"] == 1000 and r8["recall_milli"] == 333
+
+    # one pass: the plan's aggregate count does not grow with the list
+    def n_aggs(thresholds):
+        df = threshold_sweep(pairs, truth, thresholds=thresholds)
+        df.collect()
+        return df._jdf.queryExecution().executedPlan().toString().count("HashAggregate(")
+
+    assert n_aggs((500,)) == n_aggs((500, 600, 700, 800, 900))
 
 
 def test_fluency_buckets_thirds_and_rank(spark):

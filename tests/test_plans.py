@@ -1,16 +1,19 @@
 """Physical-plan guardrails (SURVEY.md §7 hard-part 3): assert the
 optimizations we rely on at 100-TB scale actually appear in the plans —
 column pruning reaches the parquet scan, the global crawl order is a
-range-partitioned distributed sort (never a single-task window), and the
+cell-partitioned rank (never a single-task window over data), and the
 seen anti-join + hosts join pick the intended strategies."""
 
+import ast
 import re
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
+import oa_spider_spark
 from oa_spider_spark import datagen
-from oa_spider_spark.frontier.politeness import global_order_and_limit
+from oa_spider_spark.frontier.politeness import apply_budget, budget_and_order, order_cols
 from oa_spider_spark.frontier.round import dedup_frontier
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -18,6 +21,46 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _plan_nodes(p):
+    name = p.nodeName()
+    if name.startswith("AdaptiveSparkPlan"):
+        yield from _plan_nodes(p.executedPlan())
+        return
+    if "QueryStage" in name:
+        yield from _plan_nodes(p.plan())
+        return
+    yield p
+    ch = p.children()
+    for i in range(ch.size()):
+        yield from _plan_nodes(ch.apply(i))
+
+
+def unpartitioned_window_rows(df) -> list:
+    """Rows read by each Window with no partition in `df`'s executed
+    plan (run it first): the numOutputRows of the first node below the
+    window that counts its output."""
+    out = []
+    for n in _plan_nodes(df._jdf.queryExecution().executedPlan()):
+        if n.nodeName() == "Window" and n.partitionSpec().isEmpty():
+            for m in _plan_nodes(n.child()):
+                if m.metrics().contains("numOutputRows"):
+                    out.append(m.metrics().apply("numOutputRows").value())
+                    break
+    return out
+
+
+def _unpersist(df) -> None:
+    cache = getattr(df, "_ordered_cache", None)
+    if cache is not None:
+        cache.unpersist()
+
+
+def _frontier(spark, n, n_hosts, hot_share):
+    return datagen.seed_frontier_df(spark, n, n_hosts=n_hosts, hot_share=hot_share).withColumn(
+        "budget_per_round", F.lit(None).cast("int")
+    )
 
 
 def test_token_count_prunes_documents_scan(spark):
@@ -40,55 +83,86 @@ def test_crawl_select_pushes_nothing_through_python(spark):
 
 
 def test_global_order_is_bucketed_not_single_task(spark):
-    """The engine's total order must be a distributed bucketed rank —
-    never a partition-less Window (single task at 10^10 rows), and never
-    a priority-bucket-only rank (only ~100 buckets ⇒ each in-bucket
-    window is ~1% of the frontier in ONE task). Every data window must
-    partition by the (_b, _s) cell, and cells must be bounded."""
-    f = datagen.seed_frontier_df(spark, 2000, n_hosts=6, hot_share=0.4)
-    out = global_order_and_limit(f, None, partitions=4)
+    """The engine's total order (`budget_and_order`) must be a
+    distributed cell rank: every data row_number window partitions by
+    the priority cell `_b`, and the only windows without a partition
+    run over the ≤100-row cell metadata — never over the frontier."""
+    f = _frontier(spark, 2000, 6, 0.4)
+    out = budget_and_order(f, 10_000)
     out.collect()
     plan = plan_of(out)
-    # every data row_number window must carry the 2-level cell spec
     for line in plan.splitlines():
         if "Window" in line and "row_number" in line:
-            assert "_b" in line and "_s" in line, f"coarse window: {line}"
-    assert "BroadcastHashJoin" in plan, plan  # offsets join must broadcast
-    # bounded single-task work: no (priority, created_ms-range) cell may
-    # hold a macroscopic share of the rows
-    from pyspark.sql import functions as F2
-
-    cells = (
-        f.groupBy(
-            F2.least(F2.greatest(F2.lit(99) - F2.col("priority"), F2.lit(0)), F2.lit(99)),
-            F2.col("created_ms"),
-        ).count()
-    )
-    n_cells = cells.count()
-    assert n_cells >= 100  # the second key actually splits the buckets
-    cache = getattr(out, "_ordered_cache", None)
-    if cache is not None:
-        cache.unpersist()
+            assert re.search(r"windowspecdefinition\((host#\d+, )?_b#\d+,", line), line
+    assert "BroadcastHashJoin" in plan, plan  # global offsets broadcast
+    rows = unpartitioned_window_rows(out)
+    assert rows and max(rows) <= 100, rows
+    _unpersist(out)
 
 
 def test_global_order_total_rank_is_correct(spark):
-    """fetch_order from the 2-level bucketed rank must equal the rank of
-    a plain global sort (the semantics the decomposition must preserve)."""
-    f = datagen.seed_frontier_df(spark, 1500, n_hosts=5, hot_share=0.5)
-    out = global_order_and_limit(f, None)
-    got = [
-        r["url_hash"]
-        for r in out.orderBy("fetch_order").select("url_hash").collect()
-    ]
-    from oa_spider_spark.frontier.politeness import order_cols
-
+    """With a budget no host reaches, fetch_order from the cell rank
+    must equal the rank of a plain global sort (the semantics the
+    decomposition must preserve)."""
+    f = _frontier(spark, 1500, 5, 0.5)
+    out = budget_and_order(f, 10_000)
+    got = [(r["url_hash"], r["fetch_order"]) for r in out.orderBy("fetch_order").collect()]
     want = [r["url_hash"] for r in f.orderBy(*order_cols()).select("url_hash").collect()]
-    assert got == want
-    orders = [r["fetch_order"] for r in out.orderBy("fetch_order").collect()]
-    assert orders == list(range(1, len(want) + 1))
-    cache = getattr(out, "_ordered_cache", None)
-    if cache is not None:
-        cache.unpersist()
+    assert got == list(zip(want, range(1, len(want) + 1)))
+    _unpersist(out)
+
+
+def test_no_hand_rolled_offset_windows():
+    """Only `ranking.py` may build a cell-offsets window: no window
+    without a partition, and no exclusive running sum
+    (rowsBetween(unboundedPreceding, -1)), anywhere else in frontier/ or
+    operators/. Each exemption names its reason."""
+    exempt = {
+        # ranks the k rows left after orderBy().limit(k)
+        ("operators/similarity.py", "_ranked_topk"),
+        # heading-tree windows, partitioned by document; not offsets
+        ("operators/html.py", "heading_outline"),
+    }
+    root = Path(oa_spider_spark.__file__).parent
+    hits = set()
+    for sub in ("frontier", "operators"):
+        for path in sorted((root / sub).glob("*.py")):
+            rel = f"{sub}/{path.name}"
+            for top in ast.parse(path.read_text()).body:
+                for node in ast.walk(top):
+                    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                        continue
+                    fn, base = node.func.attr, node.func.value
+                    bare = fn == "orderBy" and isinstance(base, ast.Name) and base.id == "Window"
+                    excl = (
+                        fn == "rowsBetween"
+                        and len(node.args) == 2
+                        and ast.unparse(node.args[0]) == "Window.unboundedPreceding"
+                        and ast.unparse(node.args[1]) == "-1"
+                    )
+                    if bare or excl:
+                        hits.add((rel, getattr(top, "name", "<module>")))
+    assert hits == exempt, sorted(hits - exempt)
+
+
+def test_fluency_buckets_bounded_at_scale(spark):
+    """fluency_buckets on 10^5 rows, with distinct scores and with one
+    identical score: the rank equals a flat sort by (score DESC, id ASC),
+    and no window without a partition reads more than 256 rows."""
+    from oa_spider_spark.operators.text import fluency_buckets
+
+    n = 100_000
+    for score, want in (
+        (F.expr(f"(id * 7919) % {n}"), F.lit(n) - F.col("score_micro")),  # a permutation
+        (F.lit(5).cast("long"), F.col("doc_id") + 1),
+    ):
+        df = spark.range(n).select(F.col("id").alias("doc_id"), score.alias("score_micro"))
+        res = fluency_buckets(df).agg(
+            F.count("*").alias("n"), F.sum((F.col("rank") != want).cast("int")).alias("bad")
+        )
+        assert res.collect()[0].asDict() == {"n": n, "bad": 0}
+        rows = unpartitioned_window_rows(res)
+        assert rows and max(rows) <= 256, rows
 
 
 def test_dedup_frontier_is_partial_aggregate_not_window(spark):
@@ -116,27 +190,47 @@ def test_fetch_stage_is_arrow_not_row_python(spark):
     assert "BatchEvalPython" not in plan, "row-at-a-time Python UDF in fetch path"
 
 
+def _assert_matches_unfused(frame, budget=80):
+    """`budget_and_order(frame, budget, limit)` must equal apply_budget
+    followed by a flat sort with fetch_order = position."""
+    flat = [r["url_hash"] for r in apply_budget(frame, budget).orderBy(*order_cols()).collect()]
+    for limit in (None, 150):
+        fused = budget_and_order(frame, budget, limit)
+        ordered = fused.orderBy("fetch_order").collect()
+        got = [(r["url_hash"], r["fetch_order"]) for r in ordered]
+        want = list(zip(flat, range(1, len(flat) + 1)))[:limit]
+        assert got == want and len(got) > 0
+        _unpersist(fused)
+
+
+def test_global_order_correct_for_out_of_range_priorities(spark):
+    """Code-review r02: priorities outside 0..99 must not break the total
+    order. The clamped `_b` cell puts priority 150 with 99 and -50 with 0,
+    which is safe because the cells are a monotone coarsening and in-cell
+    windows sort by the full key — the rank must equal a plain full sort
+    for ANY priority domain, with and without a binding budget."""
+    wide = _frontier(spark, 400, 4, 0.3).withColumn(
+        "priority",
+        F.when(F.col("url_hash") % 7 == 0, F.col("priority") + 120)
+        .when(F.col("url_hash") % 7 == 1, F.col("priority") - 150)
+        .otherwise(F.col("priority")),
+    )
+    out = budget_and_order(wide, 10_000)
+    got = [r["url_hash"] for r in out.orderBy("fetch_order").select("url_hash").collect()]
+    want = [r["url_hash"] for r in wide.orderBy(*order_cols()).select("url_hash").collect()]
+    assert got == want
+    _unpersist(out)
+    _assert_matches_unfused(wide)
+
+
 def test_budget_and_order_matches_unfused_pipeline(spark):
     """The fused budget+rank operator (round hot path) must produce the
-    exact selection and fetch_order of the reference pipeline
-    apply_budget → global_order_and_limit, and its data windows must be
-    partitioned by the (host, bucket)/(bucket) cells — the hot host's
-    backlog must never be sorted in one task."""
-    from oa_spider_spark.frontier.politeness import apply_budget, budget_and_order
-
-    f = datagen.seed_frontier_df(spark, 3000, n_hosts=6, hot_share=0.5).withColumn(
-        "budget_per_round", F.lit(None).cast("int")
-    )
-    for limit in (None, 150):
-        fused = budget_and_order(f, 80, limit)
-        unfused = global_order_and_limit(apply_budget(f, 80), limit)
-        got = [(r["url_hash"], r["fetch_order"]) for r in fused.orderBy("fetch_order").collect()]
-        want = [(r["url_hash"], r["fetch_order"]) for r in unfused.orderBy("fetch_order").collect()]
-        assert got == want and len(got) > 0
-        for df in (fused, unfused):
-            cache = getattr(df, "_ordered_cache", None)
-            if cache is not None:
-                cache.unpersist()
+    exact selection and fetch_order of the reference pipeline:
+    apply_budget, then a flat sort with fetch_order = position. Its data
+    windows must be partitioned by the (host, bucket)/(bucket) cells —
+    the hot host's backlog must never be sorted in one task."""
+    f = _frontier(spark, 3000, 6, 0.5)
+    _assert_matches_unfused(f)
 
     fused = budget_and_order(f, 80)
     fused.collect()
@@ -144,9 +238,7 @@ def test_budget_and_order_matches_unfused_pipeline(spark):
     for line in plan.splitlines():
         if "row_number" in line and "windowspecdefinition" in line.lower():
             assert "_b" in line, f"data window not bucket-partitioned: {line}"
-    cache = getattr(fused, "_ordered_cache", None)
-    if cache is not None:
-        cache.unpersist()
+    _unpersist(fused)
 
 
 def test_attachments_join_is_hash_join_not_nested_loop(spark):
@@ -181,29 +273,3 @@ def test_topk_queries_use_distributed_topk(spark):
         df = entry_mod.queries()[q](spark, SF_DIR)
         plan = plan_of(df)
         assert "TakeOrderedAndProject" in plan, f"{q}: {plan[:800]}"
-
-
-def test_global_order_correct_for_out_of_range_priorities(spark):
-    """Code-review r02: the old clamped `_b` let priority 150 share a
-    bucket with priority 99, and the created_ms sub-split then interleaved
-    them out of order. `_b` is now the exact negated priority — the rank
-    must equal a plain full sort for ANY priority domain."""
-    base = datagen.seed_frontier_df(spark, 400, n_hosts=4, hot_share=0.3)
-    f = base.withColumn(
-        "priority",
-        F.when(F.col("url_hash") % 7 == 0, F.col("priority") + 120)
-        .when(F.col("url_hash") % 7 == 1, F.col("priority") - 150)
-        .otherwise(F.col("priority")),
-    )
-    out = global_order_and_limit(f, None)
-    got = [
-        r["url_hash"]
-        for r in out.orderBy("fetch_order").select("url_hash").collect()
-    ]
-    from oa_spider_spark.frontier.politeness import order_cols
-
-    want = [r["url_hash"] for r in f.orderBy(*order_cols()).select("url_hash").collect()]
-    assert got == want
-    cache = getattr(out, "_ordered_cache", None)
-    if cache is not None:
-        cache.unpersist()

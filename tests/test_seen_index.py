@@ -392,3 +392,24 @@ def test_cuckoo_filter_insert_probe_delete(spark):
     assert all(got2[x] for x in kept)  # deletions never harm others
     still = sum(got2[x] for x in revoked)
     assert still <= 5  # only fp-collision survivors may linger
+
+
+def test_cuckoo_overfull_table_keeps_every_inserted_key(spark):
+    """ADVICE r05: when an eviction walk ran out of kicks, the last
+    displaced fingerprint (an already-inserted key) was dropped — a
+    false negative. An 8-bucket table (32 slots) overfilled with 200
+    keys must still probe positive for every one of them."""
+    import hashlib
+
+    from oa_spider_spark.frontier.cuckoo import build_cuckoo_shards, probe_cuckoo
+
+    def h64(s):
+        v = int(hashlib.md5(str(s).encode()).hexdigest()[:16], 16)
+        return v - (1 << 64) if v >= (1 << 63) else v
+
+    inserted = [h64(f"over{i}") for i in range(200)]
+    keys = spark.createDataFrame([(x,) for x in inserted], "url_hash long")
+    shards = build_cuckoo_shards(keys, 1, 8)
+    got = {r["url_hash"]: r["maybe_seen"] for r in probe_cuckoo(keys, shards, 1, 8).collect()}
+    assert len(got) == len(inserted)
+    assert [x for x in inserted if not got[x]] == []
